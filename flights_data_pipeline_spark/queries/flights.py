@@ -13,7 +13,7 @@ the whole pipeline (CSV round-trip, partition-overwrite upserts,
 transform DAG). A hash match therefore certifies the entire spine, not
 just the final SELECT.
 
-The pipeline materializes once per (process, sf_dir) into a temp
+The pipeline materializes once per (session, sf_dir) into a temp
 warehouse — the first flights query sampled in a session pays the
 multi-second build; the rest read parquet. Fixture-based pipeline
 coverage (idempotency, skip-on-empty, blind spot) stays in
@@ -23,7 +23,6 @@ coverage (idempotency, skip-on-empty, blind spot) stays in
 from __future__ import annotations
 
 import atexit
-import os
 import shutil
 import tempfile
 
@@ -33,17 +32,20 @@ from pyspark.sql import functions as F
 from ..pipeline import derive
 from ..pipeline.runner import run_pipeline
 from ..pipeline.transforms import DIM_TIME_ORACLE_SQL, ORACLES
+from ..session import session_memo
 from .registry import query
-
-_WAREHOUSES: dict[str, str] = {}
 
 
 def _warehouse(spark: SparkSession, sf_dir: str) -> str:
     """Derive staging from ``sf_dir``, run the full pipeline once per
-    (process, sf_dir); return the warehouse dir."""
-    wh = _WAREHOUSES.get(sf_dir)
-    if wh is not None and os.path.isdir(wh):
-        return wh
+    (session, sf_dir); return the warehouse dir. The dir lives until
+    process exit."""
+    return session_memo(
+        spark, ("flights_warehouse", sf_dir), lambda: _build_warehouse(spark, sf_dir)
+    )
+
+
+def _build_warehouse(spark: SparkSession, sf_dir: str) -> str:
     base = tempfile.mkdtemp(prefix="fdp_flights_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
     dirs = {k: f"{base}/{k}" for k in ("source", "landing", "staging", "warehouse")}
@@ -73,7 +75,6 @@ def _warehouse(spark: SparkSession, sf_dir: str) -> str:
         dirs["warehouse"],
         derive.DERIVE_DAYS,
     )
-    _WAREHOUSES[sf_dir] = dirs["warehouse"]
     return dirs["warehouse"]
 
 

@@ -17,13 +17,23 @@ Design decisions (all aimed at oracle-exact correctness + 100 TB posture):
   local[32]; on a real cluster this would be set to ~2-3× total cores.
 * Arrow enabled — every Python-side exchange (createDataFrame, toPandas,
   pandas_udf) is vectorized.
+
+``session_memo`` is the engine's one per-session memo: work whose result
+is a pure function of immutable inputs within one Spark application
+(table plans, dispatch decisions, trained artifacts) is built once per
+application and dropped when the application changes.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable, Hashable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def default_parallelism() -> int:
@@ -38,7 +48,17 @@ def get_spark(
     driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the engine's SparkSession with pinned semantics."""
+    """Build the engine's SparkSession with pinned semantics, or return
+    the live one UNCHANGED.
+
+    ``getOrCreate()`` on a live session would re-apply every builder
+    conf to it, so a library caller (the CLI run in-process, a tool
+    imported into a notebook) would silently rewrite the shared
+    session's shuffle partitions and parallelism under its owner."""
+    # the same live-session test getOrCreate() makes before it re-applies
+    live = SparkSession._instantiatedSession
+    if live is not None and live._sc._jsc is not None:
+        return live
     cpus = cpus or default_parallelism()
     shuffle_partitions = shuffle_partitions or cpus
     driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
@@ -73,6 +93,41 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: applicationId → {key: value} for the live application only (at most
+#: one entry): a process that cycles sessions keeps nothing of the old ones
+_MEMO: dict[str, dict] = {}
+_MEMO_LOCK = threading.Lock()
+_MISSING = object()
+
+
+def session_memo(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> T:
+    """``build()`` once per (Spark application, ``key``); later calls in
+    the same application return the stored value.
+
+    The caller asserts the value is a pure function of ``key`` within
+    one application (immutable parquet in). Store plans, decisions and
+    trained artifacts — never a frame checkpointed per query call,
+    whose blocks must die with that call. Keys start with the caller's
+    name so callers never collide.
+
+    The lock is NOT held while ``build()`` runs: builds nest (the BPE
+    merge table loads tables through this memo) and may run Spark jobs
+    for seconds. Two threads that miss together both build; the last
+    store wins, and each returns its own value."""
+    app = spark.sparkContext.applicationId
+    with _MEMO_LOCK:
+        hit = _MEMO.get(app, {}).get(key, _MISSING)
+    if hit is not _MISSING:
+        return hit
+    value = build()
+    with _MEMO_LOCK:
+        if app not in _MEMO:
+            _MEMO.clear()
+            _MEMO[app] = {}
+        _MEMO[app][key] = value
+    return value
 
 
 def get_persistent_spark(

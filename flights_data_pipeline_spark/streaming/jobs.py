@@ -599,7 +599,7 @@ def neardup_ingest_stream(
     each batch's join touches only matching buckets; history text is
     never re-read — only its signatures.
     """
-    from ..operators.merge import merge_latest_parquet
+    from ..operators.merge import merge_latest_parquet, read_store_or_none
     from ..queries.dedup import minhash_bands, minhash_state
 
     def _process(batch: DataFrame, batch_id: int) -> None:
@@ -609,12 +609,9 @@ def neardup_ingest_stream(
         st = minhash_state(batch).localCheckpoint(eager=True)
         if st.isEmpty():
             return
-        try:
-            # __batch is the merge's order column, not signature state
-            hist = spark.read.parquet(f"{state_dir}/docs").drop("__batch")
-        except Exception:
-            hist = None
-        universe = st if hist is None else hist.unionByName(st)
+        hist = read_store_or_none(spark, f"{state_dir}/docs")
+        # __batch is the merge's order column, not signature state
+        universe = st if hist is None else hist.drop("__batch").unionByName(st)
         # dedupe replayed copies of the same doc_id inside the universe
         # (a crash between the two merges can replay a batch whose
         # state already landed) — signatures are deterministic, so
@@ -731,27 +728,24 @@ def scd2_ingest_stream(
     """
     from pyspark.sql.window import Window as W
 
-    from ..operators.merge import merge_latest_parquet
+    from ..operators.merge import merge_latest_parquet, read_store_or_none
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         if not batch.columns or batch.isEmpty():
             return
         spark = batch.sparkSession
         ev = batch.select("user_id", "event_id", "ts", "event_type")
-        try:
-            hist = spark.read.parquet(target_path)
-            open_v = (
-                hist.filter(F.col("valid_to").isNull())
-                .select(
-                    F.col("user_id").alias("o_user"),
-                    F.col("state").alias("o_state"),
-                    F.col("valid_from").alias("o_from"),
-                    F.col("o_event_id").alias("o_eid"),
-                    F.col("version").alias("o_version"),
-                )
+        hist = read_store_or_none(spark, target_path)
+        open_v = None if hist is None else (
+            hist.filter(F.col("valid_to").isNull())
+            .select(
+                F.col("user_id").alias("o_user"),
+                F.col("state").alias("o_state"),
+                F.col("valid_from").alias("o_from"),
+                F.col("o_event_id").alias("o_eid"),
+                F.col("version").alias("o_version"),
             )
-        except Exception:
-            open_v = None
+        )
         if open_v is not None:
             ev = ev.join(open_v, ev.user_id == open_v.o_user, "left")
             # watermark guard: strictly beyond the open version's
@@ -1404,7 +1398,7 @@ def split_leakage_stream(
     order-invariance contracts are pinned in
     ``tests/test_split_leakage_stream.py``.
     """
-    from ..operators.merge import merge_latest_parquet
+    from ..operators.merge import merge_latest_parquet, read_store_or_none
     from ..queries.dedup import minhash_bands, minhash_state
 
     docs_path = f"{store_path}/docs"
@@ -1417,11 +1411,8 @@ def split_leakage_stream(
         st = minhash_state(batch).localCheckpoint(eager=True)
         if st.isEmpty():
             return
-        try:
-            hist = spark.read.parquet(docs_path).drop("__batch")
-        except Exception:
-            hist = None
-        universe = st if hist is None else hist.unionByName(st)
+        hist = read_store_or_none(spark, docs_path)
+        universe = st if hist is None else hist.drop("__batch").unionByName(st)
         universe = universe.dropDuplicates(["doc_id"])
         new_bands = minhash_bands(st).alias("b")
         all_bands = minhash_bands(universe).alias("a")
@@ -2003,11 +1994,8 @@ def span_trim_ingest_stream(
         st = minhash_state(docs).localCheckpoint(eager=True)
         if st.isEmpty():
             return
-        try:
-            hist = spark.read.parquet(f"{state_dir}/docs").drop("__batch")
-        except Exception:
-            hist = None
-        universe = st if hist is None else hist.unionByName(st)
+        hist = read_store_or_none(spark, f"{state_dir}/docs")
+        universe = st if hist is None else hist.drop("__batch").unionByName(st)
         universe = universe.dropDuplicates(["doc_id"])
         new_bands = minhash_bands(st).alias("b")
         all_bands = minhash_bands(universe).alias("a")

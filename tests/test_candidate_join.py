@@ -135,17 +135,13 @@ def test_dispatch_decision_cache(spark):
 
     per_doc = _minhash_per_doc(spark, SF_DIR)
     cand = _lsh_candidates(per_doc)
-    key = ("test_dispatch_decision_cache", SF_DIR)
-    cj._DECISIONS.pop(
-        (spark.sparkContext.applicationId, key), None
-    )
+    # a fresh key per run: the session memo has no delete
+    key = ("test_dispatch_decision_cache", SF_DIR, object())
     first = cj.dispatch(cand, per_doc, cache_key=key)
     assert first == "semi-broadcast"
     # the memo is consulted before any plan walk: a conflicting frame
     # under the same key returns the cached decision (callers assert
-    # key → plans is a pure function within a session)
+    # key → plans is a pure function within a session); uncached, the
+    # same frame without its corpus proxy routes to the shuffle path
+    assert cj.dispatch(cand, None) == "shuffle"
     assert cj.dispatch(cand, None, cache_key=key) == first
-    assert (
-        spark.sparkContext.applicationId,
-        key,
-    ) in cj._DECISIONS

@@ -15,6 +15,7 @@ import shutil
 import tempfile
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from flights_data_pipeline_spark.io.catalog import load_table
@@ -95,6 +96,19 @@ def test_streamed_verdicts_equal_batch_twin(spark, neardup_stream_src):
     assert any(not v[2] for v in want.values())
     # batch-1 docs got verdicts too (against their own older peers)
     assert any(k < cut for k in got)
+
+
+def test_corrupt_state_store_raises(spark, neardup_stream_src):
+    """An existing but unreadable state store must fail the batch before
+    any verdict lands, not read as "no history" and publish every
+    document as novel (the later state merge would fail only after)."""
+    d, _ = neardup_stream_src
+    os.makedirs(f"{d}/state_corrupt/docs")
+    with open(f"{d}/state_corrupt/docs/part-00000.parquet", "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(StreamingQueryException):
+        _run(spark, d, "corrupt")
+    assert not os.path.exists(f"{d}/verdicts_corrupt")
 
 
 def test_full_replay_converges(spark, neardup_stream_src):

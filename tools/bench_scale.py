@@ -88,7 +88,7 @@ def dispatch_probes(spark) -> dict:
     """Natural (un-forced) decisions of both size dispatches at every
     scale — driver-side plan estimates only, no jobs."""
     from flights_data_pipeline_spark.io.catalog import load_table
-    from flights_data_pipeline_spark.operators import candidate_join as cj
+    from flights_data_pipeline_spark import session
     from flights_data_pipeline_spark.operators import global_order as go
     from flights_data_pipeline_spark.queries.dedup import (
         _lsh_candidates,
@@ -186,7 +186,7 @@ def probe_docs128(spark) -> dict:
     """Execute the three candidate-gated queries end-to-end at 640k
     docs on whatever path the dispatch naturally picks (expected:
     shuffle — the corpus proxy exceeds the 64 MB certificate)."""
-    from flights_data_pipeline_spark.operators import candidate_join as cj
+    from flights_data_pipeline_spark import session
 
     out = {}
     for name in GATED_QUERIES:
@@ -198,10 +198,11 @@ def probe_docs128(spark) -> dict:
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
     # the memoized decisions these executions actually used
+    memo = session._MEMO.get(spark.sparkContext.applicationId, {})
     out["decisions"] = {
         str(k[1]): v
-        for k, v in cj._DECISIONS.items()
-        if isinstance(k[1], tuple) and DOCS128 in str(k[1])
+        for k, v in memo.items()
+        if k[0] == "dispatch" and DOCS128 in str(k[1])
     }
     return out
 
