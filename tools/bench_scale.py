@@ -88,7 +88,7 @@ def dispatch_probes(spark) -> dict:
     """Natural (un-forced) decisions of both size dispatches at every
     scale — driver-side plan estimates only, no jobs."""
     from flights_data_pipeline_spark.io.catalog import load_table
-    from flights_data_pipeline_spark import session
+    from flights_data_pipeline_spark.operators import candidate_join as cj
     from flights_data_pipeline_spark.operators import global_order as go
     from flights_data_pipeline_spark.queries.dedup import (
         _lsh_candidates,
