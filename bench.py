@@ -7,6 +7,13 @@ runs per query, reports the median. Materialization uses the `noop`
 sink so every output column is computed but nothing is collected to
 the driver (collect would measure driver serialization, not the plan).
 
+That is the one timing protocol, :func:`time_query`. Every
+execution runs inside ``session.query_scope``, so the
+``localCheckpoint`` blocks a run persists are freed when it returns
+and never pile up under the next run; one untimed ``clearCache()`` +
+JVM GC separates queries. ``tools/bench_full.py`` and
+``tools/bench_scale.py`` time through the same helper.
+
 Two warmups, not one: generated-code-heavy queries (the md5-dense
 minhash signature pass) need a second execution before HotSpot's C2
 tier compiles their codegen — their first two runs measure the JIT,
@@ -19,34 +26,22 @@ single timed run per query — the shape of a first-ever execution
 intermittent costs (GC from oversized broadcasts, one-off reopt); the
 cold column is what catches them, so regressions are judged on both.
 
-LSH-composer clan members (``registry.lsh_composer_clan()``) get the
-``tools/iso_warm.py`` treatment instead — 5 warmups + driver GC
-between EVERY run — because their warm plateau is session-heat
-dependent: the 2-warmup protocol left headline clan rows swinging
-2-4× round-over-round with no source change (round-11 VERDICT
-"What's wrong #1"; BASELINE round-11 analysis). With the deep
-treatment the headline row IS the isolated-warm yardstick.
-
 Prints TWO JSON lines:
   1. full fidelity — {"metric", "value", "unit", "queries": {every
      headline query at 4 decimals}, "flights_pipeline_build_sec",
      "sf"} — also written to BENCH_headline_latest.json (repo root)
      so the complete per-query surface is a committed artifact.
-  2. FINAL line, compact (<1 KB): the driver snapshots only the last
-     2000 chars of stdout and parses the last line — a full-name
-     76-query dict measures 2076+ chars (names alone are 1451), which
-     is exactly why BENCH_r09..r11 carry ``parsed: null`` and why the
-     round-12 compact line carried only the 14-row clan dict (leaving
-     PERF_r12 blind: ``per_query: {}``). Per the round-12 VERDICT
-     (Next round #1), the final line now carries EVERY headline query
-     under a deterministic SHORT KEY (:func:`_short_key` — first
-     letter of each underscore word, extended on collision), ~900
-     chars total, so the driver's per-query and scaling comparisons
-     see the full surface again. The short→full mapping is committed
-     in BENCH_headline_latest.json (``short_keys``) next to the
-     full-name dict, which remains line 1 verbatim (append-only,
-     never renamed — the compact aliases are a transport encoding,
-     not a rename).
+  2. FINAL line, compact: the bench's consumer keeps only the last
+     2000 chars of stdout and parses the last line, and a full-name
+     76-query dict measures 2076+ chars (names alone are 1451). So
+     the final line carries every headline query under a
+     deterministic SHORT KEY (:func:`short_key_map` — first letter of
+     each underscore word, extended on collision), ~1100 chars at 76
+     queries, with a warning on stderr past 1800. The short→full
+     mapping is committed in BENCH_headline_latest.json
+     (``short_keys``) next to the full-name dict, which remains line
+     1 verbatim (the compact aliases are a transport encoding, not a
+     rename).
 """
 
 from __future__ import annotations
@@ -58,8 +53,11 @@ import sys
 import time
 
 from flights_data_pipeline_spark.queries import REGISTRY
-from flights_data_pipeline_spark.queries.registry import lsh_composer_clan
-from flights_data_pipeline_spark.session import get_spark
+from flights_data_pipeline_spark.session import get_spark, query_scope
+
+#: the compact final line must fit the 2000-char stdout tail that its
+#: consumer parses; past this, warn before it silently stops parsing
+FINAL_LINE_WARN_CHARS = 1800
 
 HEADLINE = [
     "watermark_scan",
@@ -158,13 +156,53 @@ def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
+def _cold() -> bool:
+    return os.environ.get("SPARK_GRAFT_BENCH_COLD", "") == "1"
+
+
+def timed_run(spark, name: str, sf_dir: str) -> float:
+    """Seconds for one execution of ``name``, inside its own
+    ``query_scope``."""
+    with query_scope(spark):
+        t0 = time.perf_counter()
+        materialize(REGISTRY[name].fn(spark, sf_dir))
+        return time.perf_counter() - t0
+
+
+def time_query(spark, name: str, sf_dir: str) -> float:
+    """The one timing protocol: warmups, then timed runs, each run
+    inside its own ``query_scope``; returns the median in seconds, or
+    -1.0 if the query failed (reported on stderr — one query never
+    sinks a sweep). Warm: 2 warmups + 3 timed; cold
+    (SPARK_GRAFT_BENCH_COLD=1): 1 timed run. Ends with an untimed
+    ``clearCache()`` + JVM GC so the next query starts clean."""
+    try:
+        for _ in range(0 if _cold() else 2):
+            timed_run(spark, name, sf_dir)
+        return round(
+            statistics.median(
+                timed_run(spark, name, sf_dir)
+                for _ in range(1 if _cold() else 3)
+            ),
+            4,
+        )
+    except Exception as exc:
+        print(f"bench: {name}@{sf_dir} failed: {exc}", file=sys.stderr)
+        return -1.0
+    finally:
+        spark.catalog.clearCache()
+        spark.sparkContext._jvm.System.gc()
+
+
 def short_key_map(names: list[str]) -> dict[str, str]:
     """Deterministic collision-free abbreviation (full → short): first
     letter of each underscore-separated word; on collision, extend
     with successive letters of the LAST word, then a numeric suffix.
     Processing in sorted order makes the mapping a pure function of
-    the name set, so the committed ``short_keys`` table stays stable
-    round over round for unchanged names."""
+    the name set. A key stays stable only while the set of names that
+    collide with it is unchanged: a new name that sorts earlier can
+    take an existing name's key or make it extend, so compare compact
+    lines across runs through each run's committed ``short_keys``."""
     out: dict[str, str] = {}
     used: set[str] = set()
     for name in sorted(names):
@@ -188,11 +226,6 @@ def main() -> None:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
     except ValueError:
         sf = -1.0
-    cold = os.environ.get("SPARK_GRAFT_BENCH_COLD", "") == "1"
-    # discover the clan FIRST: it reads query source via inspect, so
-    # doing it before the (slow) warehouse build shrinks the window in
-    # which a concurrent source edit can skew the AST walk
-    clan = set(lsh_composer_clan())
     spark = get_spark("fdp-spark-bench")
 
     # One-time flights warehouse build, timed as its OWN metric: it is
@@ -211,41 +244,14 @@ def main() -> None:
         build_sec = -1.0
     spark.sparkContext._jvm.System.gc()
 
-    def _gc() -> None:
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        q = REGISTRY.get(name)
-        if q is None:
-            continue
-        deep = name in clan  # iso_warm treatment (module docstring)
-        try:
-            if not cold:
-                for _ in range(5 if deep else 2):
-                    materialize(q.fn(spark, sf_dir))
-                    if deep:
-                        _gc()
-            runs = []
-            for _ in range(1 if cold else 3):
-                t0 = time.perf_counter()
-                materialize(q.fn(spark, sf_dir))
-                runs.append(time.perf_counter() - t0)
-                if deep:
-                    _gc()
-            timings[name] = round(statistics.median(runs), 4)
-        except Exception as exc:  # never let one query sink the whole bench
-            print(f"bench: {name} failed: {exc}", file=sys.stderr)
-            timings[name] = -1.0
-        # between-query hygiene (untimed): force the driver GC so
-        # ContextCleaner frees dead broadcast/localCheckpoint blocks —
-        # without it, accumulated session state can inflate late
-        # queries well beyond their isolated cost (see bench_full.py)
-        _gc()
+    timings = {
+        name: time_query(spark, name, sf_dir)
+        for name in HEADLINE
+        if name in REGISTRY
+    }
 
     total = round(sum(v for v in timings.values() if v >= 0), 4)
-    metric = "headline_queries_total_" + ("cold_sec" if cold else "median_sec")
+    metric = "headline_queries_total_" + ("cold_sec" if _cold() else "median_sec")
     full = {
         "metric": metric,
         "value": total,
@@ -267,24 +273,26 @@ def main() -> None:
         print(f"bench: could not write headline artifact: {exc}", file=sys.stderr)
     # FINAL line = the driver-parsed summary (see module docstring):
     # the COMPLETE per-query surface under deterministic short keys
-    # (~900 chars, inside the driver's 2000-char stdout snapshot).
-    print(
-        json.dumps(
-            {
-                "metric": metric,
-                "value": total,
-                "unit": "sec",
-                "sf": sf,
-                "build_sec": round(build_sec, 2),
-                "n_queries": len(timings),
-                "queries": {
-                    shorts[n]: round(v, 2) for n, v in timings.items()
-                },
-                "keymap": "BENCH_headline_latest.json short_keys",
-            },
-            separators=(",", ":"),
-        )
+    final = json.dumps(
+        {
+            "metric": metric,
+            "value": total,
+            "unit": "sec",
+            "sf": sf,
+            "build_sec": round(build_sec, 2),
+            "n_queries": len(timings),
+            "queries": {shorts[n]: round(v, 2) for n, v in timings.items()},
+            "keymap": "BENCH_headline_latest.json short_keys",
+        },
+        separators=(",", ":"),
     )
+    if len(final) > FINAL_LINE_WARN_CHARS:
+        print(
+            f"bench: final line is {len(final)} chars, over"
+            f" {FINAL_LINE_WARN_CHARS}; only the last 2000 are parsed",
+            file=sys.stderr,
+        )
+    print(final)
 
 
 if __name__ == "__main__":

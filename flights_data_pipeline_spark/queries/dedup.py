@@ -348,7 +348,7 @@ def _minhash_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``minhash_state`` over the corpus table as a PURE plan (no
     checkpoint anywhere in the tree), memoized per (session, sf_dir).
     Building the md5-dense plan costs ~0.4-0.6 s of py4j round-trips
-    (round-12 profile) and every LSH-clan member would rebuild it per
+    (round-12 profile) and every LSH-candidate query would rebuild it per
     run; memoizing the plan object reuses that work, never rows. Use
     for size DISPATCH (``cand_dispatch`` needs an estimatable plan);
     query bodies consume the per-call checkpointed twin

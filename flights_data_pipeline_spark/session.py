@@ -22,13 +22,19 @@ Design decisions (all aimed at oracle-exact correctness + 100 TB posture):
 is a pure function of immutable inputs within one Spark application
 (table plans, dispatch decisions, trained artifacts) is built once per
 application and dropped when the application changes.
+
+``query_scope`` is the engine's one checkpoint lifetime: RDDs a query
+call persists (its ``localCheckpoint`` blocks) are unpersisted when the
+call's scope exits, except those a memo build persisted, which live as
+long as the memo entry that holds them.
 """
 
 from __future__ import annotations
 
 import os
 import threading
-from collections.abc import Callable, Hashable
+from collections.abc import Callable, Hashable, Iterator
+from contextlib import contextmanager
 from typing import TypeVar
 
 from pyspark.sql import SparkSession
@@ -98,8 +104,16 @@ def get_spark(
 #: applicationId → {key: value} for the live application only (at most
 #: one entry): a process that cycles sessions keeps nothing of the old ones
 _MEMO: dict[str, dict] = {}
+#: applicationId → ids of the RDDs its memo builds persisted; kept apart
+#: from ``_MEMO`` so every memo key stays a caller's key, and dropped
+#: with it
+_PINNED: dict[str, set[int]] = {}
 _MEMO_LOCK = threading.Lock()
 _MISSING = object()
+
+
+def _persisted_rdd_ids(spark: SparkSession) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def session_memo(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> T:
@@ -115,19 +129,52 @@ def session_memo(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> 
     The lock is NOT held while ``build()`` runs: builds nest (the BPE
     merge table loads tables through this memo) and may run Spark jobs
     for seconds. Two threads that miss together both build; the last
-    store wins, and each returns its own value."""
+    store wins, and each returns its own value.
+
+    RDDs persisted while ``build()`` runs (a trained model's
+    checkpointed frames) are pinned for the application's life:
+    :func:`query_scope` never unpersists them, because the stored value
+    may read their blocks on every later hit."""
     app = spark.sparkContext.applicationId
     with _MEMO_LOCK:
         hit = _MEMO.get(app, {}).get(key, _MISSING)
     if hit is not _MISSING:
         return hit
+    before = _persisted_rdd_ids(spark)
     value = build()
+    pinned = _persisted_rdd_ids(spark) - before
     with _MEMO_LOCK:
         if app not in _MEMO:
             _MEMO.clear()
+            _PINNED.clear()
             _MEMO[app] = {}
+            _PINNED[app] = set()
         _MEMO[app][key] = value
+        _PINNED[app] |= pinned
     return value
+
+
+@contextmanager
+def query_scope(spark: SparkSession) -> Iterator[None]:
+    """Free every RDD persisted inside the block when it exits, except
+    those a :func:`session_memo` build pinned.
+
+    Wrap one query call together with everything that consumes its
+    frame: once the scope exits, the frame's ``localCheckpoint`` blocks
+    are gone and re-reading it fails. Harness-side and one call at a
+    time: a scope unpersists RDDs that another thread persisted while
+    it was open."""
+    jsc = spark.sparkContext._jsc
+    app = spark.sparkContext.applicationId
+    before = _persisted_rdd_ids(spark)
+    try:
+        yield
+    finally:
+        with _MEMO_LOCK:
+            keep = before | _PINNED.get(app, set())
+        rdds = jsc.getPersistentRDDs()
+        for rdd_id in set(rdds.keys()) - keep:
+            rdds[rdd_id].unpersist(True)
 
 
 def get_persistent_spark(

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import warnings
 
 import pytest
 
@@ -58,10 +59,27 @@ SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    matched: set[str] = set()
+    files: set[str] = set()
     for item in items:
         base = item.nodeid.rsplit("/", 1)[-1].split("[", 1)[0]
+        files.add(base.split("::", 1)[0])
         if base in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+            matched.add(base)
+    # a renamed slow test would silently rejoin the default tier;
+    # entries of files left out of this run are not judged
+    here = os.path.dirname(os.path.abspath(__file__))
+    stale = sorted(
+        e
+        for e in SLOW_TESTS - matched
+        if (f := e.split("::", 1)[0]) in files
+        or not os.path.exists(os.path.join(here, f))
+    )
+    if stale:
+        warnings.warn(
+            pytest.PytestWarning(f"SLOW_TESTS entries match no test: {stale}")
+        )
 
 
 @pytest.fixture(scope="session")

@@ -1,7 +1,9 @@
-"""Session factory and the per-session memo (session.py).
+"""Session factory, the per-session memo and the query scope
+(session.py).
 
-The memo tests stub ``spark`` with an object whose
-``sparkContext.applicationId`` can be set, so they need no JVM.
+The memo and scope tests stub ``spark`` with an object whose
+``sparkContext.applicationId`` can be set and whose ``_jsc`` serves a
+plain dict of fake persisted RDDs, so they need no JVM.
 """
 
 from __future__ import annotations
@@ -13,17 +15,39 @@ from types import SimpleNamespace
 import pytest
 
 from flights_data_pipeline_spark import session
-from flights_data_pipeline_spark.session import get_spark, session_memo
+from flights_data_pipeline_spark.session import (
+    get_spark,
+    query_scope,
+    session_memo,
+)
 
 
 @pytest.fixture(autouse=True)
 def _own_memo(monkeypatch):
     # a stub application id would drop the live test session's values
     monkeypatch.setattr(session, "_MEMO", {})
+    monkeypatch.setattr(session, "_PINNED", {})
+
+
+class _FakeRDD:
+    def __init__(self, rdds: dict, rdd_id: int):
+        self.rdds, self.rdd_id = rdds, rdd_id
+
+    def unpersist(self, blocking):
+        del self.rdds[self.rdd_id]
 
 
 def _stub(app_id: str) -> SimpleNamespace:
-    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+    rdds: dict[int, _FakeRDD] = {}
+    jsc = SimpleNamespace(getPersistentRDDs=lambda: dict(rdds))
+    return SimpleNamespace(
+        rdds=rdds,
+        sparkContext=SimpleNamespace(applicationId=app_id, _jsc=jsc),
+    )
+
+
+def _persist(s: SimpleNamespace, rdd_id: int) -> None:
+    s.rdds[rdd_id] = _FakeRDD(s.rdds, rdd_id)
 
 
 def _never():
@@ -97,3 +121,39 @@ def test_concurrent_inserts_lose_no_key():
     for i in range(n):
         for j in range(200):
             assert session_memo(s, ("thread", i, j), _never) == (i, j)
+
+
+def test_scope_frees_what_the_call_persisted_but_not_memo_builds():
+    s = _stub("app-scope")
+    _persist(s, 1)  # persisted before the scope: not the call's
+    with query_scope(s):
+        _persist(s, 2)
+        session_memo(s, ("model",), lambda: _persist(s, 3))
+        _persist(s, 4)
+    assert sorted(s.rdds) == [1, 3]
+    # a later scope still keeps the memo's RDD
+    with query_scope(s):
+        session_memo(s, ("model",), _never)
+        _persist(s, 5)
+    assert sorted(s.rdds) == [1, 3]
+
+
+def test_scope_frees_on_error():
+    s = _stub("app-scope-error")
+    with pytest.raises(RuntimeError):
+        with query_scope(s):
+            _persist(s, 7)
+            raise RuntimeError("query failed")
+    assert s.rdds == {}
+
+
+def test_pins_are_dropped_with_the_memo():
+    s = _stub("app-pin-old")
+    session_memo(s, ("model",), lambda: _persist(s, 1))
+    assert session._PINNED == {"app-pin-old": {1}}
+    s.sparkContext.applicationId = "app-pin-new"
+    session_memo(s, ("k",), lambda: "v")
+    assert session._PINNED == {"app-pin-new": set()}
+    with query_scope(s):
+        _persist(s, 2)
+    assert sorted(s.rdds) == [1]  # persisted before the scope
